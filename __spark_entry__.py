@@ -664,7 +664,7 @@ def _q_dedup_simhash_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
     from fetch_engines_spark.pipelines.dedup import simhash_candidate_pairs
 
     docs = _read(spark, sf_dir, "documents")
-    return simhash_candidate_pairs(docs, bits=32, n_blocks=4, max_hamming=3)
+    return simhash_candidate_pairs(docs, max_hamming=3)
 
 
 def _q_embedding_topk(spark: SparkSession, sf_dir: str) -> DataFrame:

@@ -112,7 +112,7 @@ def main() -> None:
         timed(
             spark,
             "simhash32_pairs_full",
-            lambda: simhash_candidate_pairs(docs, bits=32, n_blocks=4, max_hamming=3),
+            lambda: simhash_candidate_pairs(docs, max_hamming=3),
             results,
         )
 

@@ -1,12 +1,14 @@
 """The vectorized extraction stage: documents → ordered Markdown span arrays.
 
-One Arrow-batched ``mapInPandas`` stage carries the whole per-document chain
-(P1…C-H from the converter, M1 serialization, M2–M14 postprocess) —
-exactly one Python/JVM round-trip per the north_rule's "vectorized
-pandas/Arrow UDFs only" constraint.  Never throws: per-document failures land
-in the ``error`` column (mirrors the reference's error taxonomy,
-reference: src/errors.ts:1-31, and the converter's fallback-to-cleaned-HTML,
-markdown-converter.ts:249-253).
+One ``mapInArrow`` stage carries the whole per-document chain (P1…C-H
+from the converter, M1 serialization, M2–M14 postprocess) — exactly one
+Python/JVM round-trip per the north_rule's "vectorized pandas/Arrow UDFs
+only" constraint.  The span→html document assembly runs before it as a
+native projection (:func:`html_assembly_expr`), so only one joined html
+string per document crosses the Arrow boundary.  Never throws:
+per-document failures land in the ``error`` column (mirrors the
+reference's error taxonomy, reference: src/errors.ts:1-31, and the
+converter's fallback-to-cleaned-HTML, markdown-converter.ts:249-253).
 
 Skew handling (north_rule): callers salt-repartition on ``doc_id`` before
 this stage via :func:`salted_repartition`; Arrow batch size is bounded by
@@ -15,11 +17,10 @@ this stage via :func:`salted_repartition`; Arrow batch size is bounded by
 
 from __future__ import annotations
 
+import functools
 import re
 import time
-from collections.abc import Iterator
 
-import pandas as pd
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 from pyspark.sql.types import (
@@ -133,14 +134,12 @@ def spans_to_markdown(spans: list[dict]) -> str:
 # --- the UDF ----------------------------------------------------------------
 
 
-def _convert_document(converter, assemble, base_url, source_url, max_content_length):
-    """The per-document conversion chain shared by both batch adapters
-    (mapInPandas and mapInArrow): assemble → preprocess → to_markdown (with
+def _convert_document(converter, html, base_url, source_url, max_content_length):
+    """The per-document conversion chain: preprocess → to_markdown (with
     the cleanup fallback, parity FetchEngine.ts:138-141) → postprocess →
     source-url injection → markdown_to_spans, with the per-doc error
-    taxonomy.  ``assemble`` is a zero-arg callable returning the html
-    string so each adapter keeps its own assembly strategy while the
-    conversion+fallback logic exists exactly once.
+    taxonomy.  ``html`` is the document assembled by
+    :func:`html_assembly_expr` (NULL for a document without html spans).
 
     Returns ``(title, markdown, error, out_spans, in_bytes)``.
     """
@@ -152,7 +151,7 @@ def _convert_document(converter, assemble, base_url, source_url, max_content_len
     markdown = ""
     in_bytes = 0
     try:
-        html = assemble() or ""
+        html = html or ""
         in_bytes = len(html.encode("utf-8", "ignore"))
         content, title = converter.preprocess(html, base_url)
         if isinstance(content, str):
@@ -179,53 +178,13 @@ def _convert_document(converter, assemble, base_url, source_url, max_content_len
     return title, markdown, error, out_spans, in_bytes
 
 
-def _extract_batches(
-    batches: Iterator[pd.DataFrame], max_content_length: int | None = None
-) -> Iterator[pd.DataFrame]:
-    # Import inside the worker so the zipped --py-files package resolves.
-    from .convert.converter import MarkdownConverter
-    from .fixtures import assemble_html
-
-    converter = MarkdownConverter()
-
-    for pdf in batches:
-        out: dict[str, list] = {k: [] for k in OUTPUT_SCHEMA.names}
-        has_base = "base_url" in pdf.columns
-        has_source = "source_url" in pdf.columns
-        for row in pdf.itertuples(index=False):
-            t0 = time.perf_counter()
-            doc_id = row.doc_id
-            spans_in = row.spans if row.spans is not None else []
-            base_url = getattr(row, "base_url", None) if has_base else None
-            source_url = getattr(row, "source_url", None) if has_source else None
-            # Arrow delivers struct elements as dicts; accept Rows too.
-            title, markdown, error, out_spans, in_bytes = _convert_document(
-                converter,
-                lambda: assemble_html(
-                    [s if isinstance(s, dict) else s.asDict() for s in spans_in]
-                ),
-                base_url,
-                source_url,
-                max_content_length,
-            )
-            wall_us = int((time.perf_counter() - t0) * 1_000_000)
-            out["doc_id"].append(doc_id)
-            out["title"].append(title)
-            out["spans"].append(out_spans)
-            out["markdown"].append(markdown)
-            out["error"].append(error)
-            out["in_bytes"].append(in_bytes)
-            out["out_bytes"].append(len(markdown.encode("utf-8", "ignore")))
-            out["wall_us"].append(wall_us)
-        yield pd.DataFrame(out)
-
-
 def _extract_arrow_batches(
     batches, emit_markdown: bool = True, max_content_length: int | None = None
 ):
-    """Arrow-native variant of the extraction stage (mapInArrow): consumes
-    pyarrow RecordBatches and builds the output arrays directly, skipping
-    the pandas materialization on both sides of the boundary.
+    """The extraction stage (mapInArrow): consumes pyarrow RecordBatches
+    of (doc_id, html[, base_url, source_url]) and builds the output
+    arrays directly, with no pandas materialization on either side of
+    the boundary.
 
     With ``emit_markdown=False`` the markdown column is emitted as nulls —
     it never crosses the Arrow boundary (the span array already carries
@@ -254,40 +213,16 @@ def _extract_arrow_batches(
     for batch in batches:
         cols = {name: batch.column(i) for i, name in enumerate(batch.schema.names)}
         doc_ids = cols["doc_id"].to_pylist()
-        # html pre-assembled JVM-side (assemble_in_jvm): only the joined
-        # string crosses Arrow — the span structs never materialize as
-        # Python objects.  Fallback: assemble here from the spans column.
-        htmls = cols["html"].to_pylist() if "html" in cols else None
-        spans_col = cols["spans"].to_pylist() if htmls is None else None
+        htmls = cols["html"].to_pylist()
         base_urls = cols["base_url"].to_pylist() if "base_url" in cols else [None] * len(doc_ids)
         source_urls = (
             cols["source_url"].to_pylist() if "source_url" in cols else [None] * len(doc_ids)
         )
         o_title, o_spans, o_md, o_err, o_in, o_out, o_wall = [], [], [], [], [], [], []
-
-        def assemble(i):
-            if htmls is not None:
-                return htmls[i] or ""
-            spans_in = spans_col[i] or []
-            # null offsets order last, stable — the same explicit
-            # rule as html_assembly_expr's JVM comparator
-            return "".join(
-                s["text"]
-                for s in sorted(
-                    spans_in,
-                    key=lambda s: (s["offset"] is None, s["offset"] or 0),
-                )
-                if s["kind"] == "html" and s["text"]
-            )
-
-        for i, doc_id in enumerate(doc_ids):
+        for i in range(len(doc_ids)):
             t0 = time.perf_counter()
             title, markdown, error, out_spans, in_bytes = _convert_document(
-                converter,
-                lambda: assemble(i),
-                base_urls[i],
-                source_urls[i],
-                max_content_length,
+                converter, htmls[i], base_urls[i], source_urls[i], max_content_length
             )
             o_title.append(title)
             o_spans.append(out_spans)
@@ -340,8 +275,8 @@ def html_assembly_expr(spans_col: str = "spans"):
     shipped or built).
 
     Null offsets (contract-violating but tolerated) order LAST, stable
-    among themselves — the same explicit rule as the Python fallback
-    assembly, so assemble_in_jvm=True/False agree on every input."""
+    among themselves — the same explicit rule as
+    ``fixtures.assemble_html``, so both assemblies agree on every input."""
     filtered = F.filter(
         F.col(spans_col),
         lambda s: (s["kind"] == "html") & s["text"].isNotNull() & (s["text"] != ""),
@@ -362,18 +297,14 @@ def extract_spans(
     documents: DataFrame,
     num_partitions: int | None = None,
     keep_markdown: bool = True,
-    use_arrow: bool = True,
     max_content_length: int | None = None,
-    assemble_in_jvm: bool = True,
 ) -> DataFrame:
     """documents(doc_id, spans[, base_url, canonical_url, source_url]) →
     outputs(doc_id, title, spans, markdown, error, metrics cols).
 
-    Defaults to the Arrow-native ``mapInArrow`` stage (measured ~15% faster
-    than mapInPandas on this workload — no pandas materialization);
-    ``use_arrow=False`` selects the mapInPandas variant.
-    ``assemble_in_jvm`` (default) performs the span→html document assembly
-    as a native projection so the span structs never cross into Python.
+    The span→html document assembly is a native projection
+    (:func:`html_assembly_expr`), so the span structs never cross into
+    Python; the conversion chain runs in one ``mapInArrow`` stage.
     """
     df = documents
     if num_partitions:
@@ -381,25 +312,13 @@ def extract_spans(
     # canonical_url is part of the documents contract but unused by the
     # conversion chain — excluding it here keeps it off the Arrow boundary
     cols = [c for c in ("doc_id", "base_url", "source_url", "spans") if c in df.columns]
-    sel = df.select(*cols)
-    if use_arrow and assemble_in_jvm and hasattr(sel, "mapInArrow"):
-        sel = sel.withColumn("html", html_assembly_expr("spans")).drop("spans")
-    if use_arrow and hasattr(sel, "mapInArrow"):
-        import functools
-
-        fn = functools.partial(
-            _extract_arrow_batches,
-            emit_markdown=keep_markdown,
-            max_content_length=max_content_length,
-        )
-        out = sel.mapInArrow(fn, schema=OUTPUT_SCHEMA)
-    else:
-        import functools
-
-        out = sel.mapInPandas(
-            functools.partial(_extract_batches, max_content_length=max_content_length),
-            schema=OUTPUT_SCHEMA,
-        )
+    sel = df.select(*cols).withColumn("html", html_assembly_expr("spans")).drop("spans")
+    fn = functools.partial(
+        _extract_arrow_batches,
+        emit_markdown=keep_markdown,
+        max_content_length=max_content_length,
+    )
+    out = sel.mapInArrow(fn, schema=OUTPUT_SCHEMA)
     if not keep_markdown:
         out = out.drop("markdown")
     return out

@@ -688,8 +688,8 @@ def assemble_html(spans: list[dict]) -> str:
     ordered = sorted(
         (s for s in spans if s.get("kind") == "html" and s.get("text")),
         # null offsets order last, stable — the same explicit rule as
-        # html_assembly_expr's JVM comparator and the Arrow fallback, so
-        # every assembly path agrees on contract-violating inputs
+        # html_assembly_expr's JVM comparator, so both assemblies agree
+        # on contract-violating inputs
         key=lambda s: (s["offset"] is None, s["offset"] if s["offset"] is not None else 0),
     )
     return "".join(s["text"] for s in ordered)

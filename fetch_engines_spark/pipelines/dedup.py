@@ -7,16 +7,20 @@ Scale notes (100 TB design):
 - MinHash-LSH shuffles on (band_id, band_hash) bucket keys instead of
   all-pairs — candidate pairs only form inside buckets, which is the only
   way n² dedup survives at 10^12 documents.
-- SimHash is a single pass (explode tokens → bit-majority agg); candidate
-  generation is the Manku pigeonhole block join — at web scale use the
-  64-bit/16-bit-block config (simhash_candidate_pairs64) with the shared
-  degenerate-bucket cap (pipelines.candidates.bucket_pairs).
+- SimHash signatures come from one Arrow-batched map stage (per-task
+  token memo → bit-majority votes; no explode, no aggregation exchange);
+  candidate generation is the Manku pigeonhole block join — at web scale
+  use the 64-bit/16-bit-block config (simhash_candidate_pairs64) with the
+  shared degenerate-bucket cap (pipelines.candidates.bucket_pairs).
 
 MinHash here is md5-based (portable to the DuckDB oracle, stable across
 engines and versions) rather than Spark's hash() (engine-specific).
 """
 
 from __future__ import annotations
+
+from functools import reduce
+from operator import add
 
 from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
@@ -1227,97 +1231,113 @@ JOIN docs b ON p.doc_b = b.doc_id
 
 
 def simhash(df: DataFrame, text_col: str = "text", bits: int = 16) -> DataFrame:
-    """SimHash document fingerprint (bit-majority over token hashes).
+    """SimHash document fingerprint (bit-majority over token hashes):
+    (doc_id, simhash) with ``bits`` <= 32 signature bits.
 
     Bit ``i`` of a token's hash is the high bit of hex digit ``i`` of its
-    md5 (digit >= '8') — portable across engines, so the DuckDB oracle can
-    verify values exactly (``simhash_oracle_sql``), unlike xxhash64.  One
-    md5 per token covers up to 32 bits.  One explode + one
-    map-side-combinable groupBy: the scale-safe shape at 10^12 docs.
+    md5 (digit >= '8') — portable across engines, so the DuckDB twin
+    ``simhash_oracle_sql`` verifies values exactly, unlike xxhash64.  One
+    md5 per token covers up to 32 bits.  Computed by the one Arrow
+    signature stage, :func:`_simhash_stage`.
     """
     if bits > 32:
         raise ValueError("md5-hex simhash supports at most 32 bits")
+    return _simhash_stage(df, text_col, {"simhash": ""}, bits)
+
+
+def simhash64(df: DataFrame, text_col: str = "text") -> DataFrame:
+    """64-bit SimHash as two 32-bit halves (doc_id, sim_lo, sim_hi).
+
+    Two salted md5s per token (the low half votes from md5(token), the
+    high half from md5('hi|' || token)) extend the md5-hex construction
+    of :func:`simhash` past its 32-bit cap; splitting the signature into
+    two non-negative 32-bit longs keeps every block/xor/bit_count
+    downstream in plain positive int64 arithmetic on BOTH engines (no
+    signed-top-bit portability trap).  DuckDB twin:
+    ``simhash64_oracle_sql``."""
+    return _simhash_stage(df, text_col, {"sim_lo": "", "sim_hi": "hi|"}, 32)
+
+
+def _simhash_stage(
+    df: DataFrame, text_col: str, salts: dict[str, str], bits: int
+) -> DataFrame:
+    """The one SimHash signature stage: a single Arrow-batched map
+    computes every signature word of a document — no explode, no
+    aggregation exchange.  ``salts`` maps each output word column to its
+    md5 salt: word ``w`` votes from md5(salt_w || token).
+
+    Bit i of a word is the top bit of hex digit i of the salted md5 (bit
+    4·i of the digest's MSB-first bit string), and it is set when
+    2·ones_i > n — the ±1 majority v_i > 0, so a tie leaves it clear —
+    with n counting every token of ``text.split(' ')``, empty ones
+    included.  Unique tokens are hashed once per task (a capped memo;
+    guide §4.5), so the per-document work is one integer vector add per
+    distinct token.  NULL text yields no row.
+
+    Contract: one row per non-null doc_id (the shape every caller feeds,
+    and pair generation requires it) — rows sharing a doc_id are emitted
+    separately, not vote-merged as the DuckDB twins' GROUP BY would."""
+    from pyspark.sql.types import LongType, StructField, StructType
+
     from .spread import spread_scan
 
-    toks = spread_scan(df).select(
-        "doc_id", F.explode(F.split(F.col(text_col), " ")).alias("tok")
-    ).withColumn("h", F.md5("tok"))
-    # ones-count votes: the classic ±1 vote sum v_i = 2·ones_i − n, so
-    # v_i > 0 ⟺ 2·ones_i > n — same bit, but the aggregate input is a
-    # branchless boolean cast instead of a CASE (measured 24% off the
-    # whole vote aggregation at sf1.0)
-    votes = [
-        F.sum((F.substring("h", i + 1, 1) >= "8").cast("int")).alias(f"b{i}")
-        for i in range(bits)
-    ]
-    agg = toks.groupBy("doc_id").agg(F.count("*").alias("n"), *votes)
-    sig = None
-    for i in range(bits):
-        bit = F.when(2 * F.col(f"b{i}") > F.col("n"), F.lit(1 << i)).otherwise(0)
-        sig = bit if sig is None else sig + bit
-    return agg.select("doc_id", sig.cast("long").alias("simhash"))
-
-
-def _pigeonhole_pairs_uncapped(
-    stacked: DataFrame,
-    n_blocks: int,
-    earlier_block_differs,
-    carry: list[str],
-    out_a: str = "doc_a",
-    out_b: str = "doc_b",
-    big_bucket: int = 1024,
-) -> DataFrame:
-    """Exactly-once pigeonhole block pairs WITHOUT a distinct, with the
-    oversized-bucket fan-out spread across the cluster.
-
-    Replaces ``bucket_pairs(...).distinct()`` for the uncapped SimHash
-    queries, where two structural costs dominated at scale (measured at
-    sf1.0: 758M candidate pairs, one 32,663-doc bucket = 533M of them on
-    ONE task, then an 84.7M-row distinct shuffle):
-
-    1. **Min-block emission instead of distinct (guide §2.4).**  A pair
-       within the hamming bound shares ≥1 block; the plain join emits it
-       once per shared block and dedups with a full shuffle.  Here the
-       join emits a pair ONLY at its minimal shared block — for every
-       earlier block, ``earlier_block_differs(b)`` (a bitwise predicate
-       over the carried signature columns) must hold.  Each pair is
-       emitted exactly once, so no distinct — and no exchange at all —
-       follows the join.
-
-    2. **Triangle-partitioned self-join for oversized buckets (guide
-       §2.5).**  A degenerate (block_id, block_val) bucket of n docs is a
-       single join key with C(n,2) output — AQE cannot split one key, so
-       the fan-out lands on one task.  Buckets over ``big_bucket`` rows
-       are split into G ≈ √(4·parallelism) deterministic groups
-       (pmod(xxhash64(doc_id), G)); each row is replicated to the G
-       tasks (least(g,j), greatest(g,j)), and a pair with groups
-       (ga, gb) matches in EXACTLY the task (min(ga,gb), max(ga,gb))
-       (enforced by the task==group-pair filter, which only bites when
-       ga==gb), so the bucket's C(n,2) pairs spread over G·(G+1)/2 tasks
-       with no duplicates.  Replication cost is G× the oversized-bucket
-       rows only — small rows (id + signature), never the documents.
-
-    Both join inputs are explicitly repartitioned by their join keys to
-    the default parallelism: AQE would otherwise coalesce the ~MB-sized
-    shuffle into 1-4 partitions and serialize the multi-hundred-million
-    row join fan-out (output size is invisible to AQE's input-byte
-    coalescing); an explicit numbered repartition is exempt from
-    coalescing and scales with the cluster, not a constant.
-    """
-    pairs = _salted_self_pairs(
-        stacked,
-        key_cols=["block_id", "block_val"],
-        id_col="doc_id",
-        carry=carry,
-        keep_cols=["block_id"],
-        out_a=out_a,
-        out_b=out_b,
-        big_bucket=big_bucket,
+    df = spread_scan(df)
+    names = list(salts)
+    schema = StructType(
+        [df.schema["doc_id"], *[StructField(n, LongType()) for n in names]]
     )
-    keep = F.lit(True)
-    for bp in range(n_blocks - 1):
-        keep = keep & ((F.col("block_id") <= F.lit(bp)) | earlier_block_differs(bp))
-    return pairs.filter(keep).drop("block_id")
+    prefixes = [salts[n].encode("utf-8") for n in names]
+
+    def batches(it):
+        import hashlib
+        from collections import Counter
+
+        import numpy as np
+        import pandas as pd
+
+        # per-task memo of unique-token vote bits; CAPPED so a huge
+        # partition vocabulary at web scale cannot grow the Python worker
+        # unboundedly (cap × ~600B ≈ 150 MB worst case at 64 bits; misses
+        # just recompute the md5)
+        cache: dict[str, np.ndarray] = {}
+        cache_cap = 1 << 18
+        weights = np.left_shift(1, np.arange(bits, dtype=np.int64))
+
+        def tok_bits(tok: str) -> np.ndarray:
+            e = cache.get(tok)
+            if e is None:
+                b = tok.encode("utf-8")
+                e = np.concatenate(
+                    [
+                        np.unpackbits(
+                            np.frombuffer(hashlib.md5(p + b).digest(), np.uint8)
+                        )[0 : 4 * bits : 4]
+                        for p in prefixes
+                    ]
+                ).astype(np.int64)
+                if len(cache) < cache_cap:
+                    cache[tok] = e
+            return e
+
+        for pdf in it:
+            ids, sigs = [], []
+            for doc_id, text in zip(pdf["doc_id"], pdf["text"]):
+                if text is None:
+                    continue
+                toks = text.split(" ")
+                ones = np.zeros(len(prefixes) * bits, np.int64)
+                for tok, c in Counter(toks).items():
+                    ones += c * tok_bits(tok)
+                ids.append(doc_id)
+                sigs.append((2 * ones > len(toks)).reshape(-1, bits) @ weights)
+            words = np.array(sigs, np.int64).reshape(-1, len(names))
+            yield pd.DataFrame(
+                {"doc_id": ids, **{n: words[:, j] for j, n in enumerate(names)}}
+            )
+
+    return df.select("doc_id", F.col(text_col).alias("text")).mapInPandas(
+        batches, schema=schema
+    )
 
 
 def _salted_self_pairs(
@@ -1332,11 +1352,29 @@ def _salted_self_pairs(
 ) -> DataFrame:
     """Ordered in-bucket self-join emitting each co-bucketed (id_a < id_b)
     pair exactly ONCE PER BUCKET, with oversized buckets
-    triangle-partitioned across the cluster (see
-    ``_pigeonhole_pairs_uncapped`` for the why).  ``keep_cols`` are
+    triangle-partitioned across the cluster.  ``keep_cols`` are
     l-side bucket columns preserved on the output (for the caller's
     minimal-bucket exactly-once filter); ``carry`` columns come out as
-    ``{c}_a`` / ``{c}_b``."""
+    ``{c}_a`` / ``{c}_b``.
+
+    Triangle partitioning (guide §2.5): a degenerate bucket of n rows is
+    a single join key with C(n,2) output — AQE cannot split one key, so
+    the fan-out lands on one task.  Buckets over ``big_bucket`` rows are
+    split into G ≈ √(4·parallelism) deterministic groups
+    (pmod(xxhash64(id), G)); each row is replicated to the G tasks
+    (least(g,j), greatest(g,j)), and a pair with groups (ga, gb) matches
+    in EXACTLY the task (min(ga,gb), max(ga,gb)) (enforced by the
+    task==group-pair filter, which only bites when ga==gb), so the
+    bucket's C(n,2) pairs spread over G·(G+1)/2 tasks with no
+    duplicates.  Replication cost is G× the oversized-bucket rows only —
+    small rows (id + signature), never the documents.
+
+    Both join inputs are explicitly repartitioned by their join keys to
+    the default parallelism: AQE would otherwise coalesce the ~MB-sized
+    shuffle into 1-4 partitions and serialize the multi-hundred-million
+    row join fan-out (output size is invisible to AQE's input-byte
+    coalescing); an explicit numbered repartition is exempt from
+    coalescing and scales with the cluster, not a constant."""
     import math
 
     spark = stacked.sparkSession
@@ -1390,157 +1428,97 @@ def _salted_self_pairs(
     return small_pairs.unionByName(big_pairs)
 
 
-def simhash_vectorized(
-    df: DataFrame, text_col: str = "text", bits: int = 32
+def _simhash_block_pairs(
+    sig: DataFrame, words: list[str], max_hamming: int, max_bucket_size: int | None
 ) -> DataFrame:
-    """Arrow-vectorized twin of :func:`simhash` for unique-``doc_id``
-    corpora: ONE batched map stage computes the whole signature per
-    document — no explode, no aggregation exchange.
+    """SimHash pairs by the 4-block pigeonhole (Manku et al., "Detecting
+    Near-Duplicates for Web Crawling") over ``sig``'s 32-bit signature
+    words: ``["simhash"]`` splits into 4 × 8-bit blocks, ``["sim_lo",
+    "sim_hi"]`` into 4 × 16-bit blocks.  Any pair within ``max_hamming``
+    (< 4) differing bits shares an untouched block, so joining on
+    (block_id, block_val) has EXACT candidate recall; the words ride the
+    join as carry columns, so the integer bit_count(xor) verify needs no
+    join back.  Returns (doc_a, doc_b, hamming).
 
-    Same pattern (and the same reference/hot-path contract) as
-    ``similarity.lsh_buckets_vectorized``: the JVM expression pipeline in
-    :func:`simhash` is the REFERENCE evaluation; this path is
-    differential-tested equal (tests/test_pipelines.py::
-    test_simhash_vectorized_matches_expr).  The per-token md5 vote of the
-    spec is integer-exact here by construction: bit i of the signature is
-    the top bit of hex digit i of md5(token) — i.e. bit 4·i of the
-    digest's MSB-first bit string — and the majority vote v_i>0 is
-    2·ones_i>n, identical to the aggregate form.  Unique tokens are
-    hashed once per task (dictionary cache; guide §4.5), then per-doc
-    vote sums are two small integer matrix ops.
+    Capped (``max_bucket_size`` set): the shared
+    pipelines.candidates.bucket_pairs guard — degenerate buckets take its
+    linear signature-star path, star groups keyed by an md5 of the full
+    signature.
 
-    Contract: one row per doc_id (the shape every caller feeds) — rows
-    sharing a doc_id would be vote-merged by the groupBy reference but
-    emitted separately here, and NULL doc_ids likewise stay per-row.
-    The uncapped pair generators, whose pair semantics already require
-    unique non-null ids, are the intended callers."""
-    from pyspark.sql.types import LongType, StructField, StructType
+    Uncapped: exactly-once emission WITHOUT a distinct, with the
+    oversized-bucket fan-out spread across the cluster.  Two structural
+    costs dominated the plain join + distinct at scale (measured at
+    sf1.0: 758M candidate pairs, one 32,663-doc bucket = 533M of them on
+    ONE task, then an 84.7M-row distinct shuffle):
 
-    if bits > 32:
-        raise ValueError("md5-hex simhash supports at most 32 bits")
-    from .spread import spread_scan
+    1. **Min-block emission instead of distinct (guide §2.4).**  The
+       plain join emits a pair once per shared block and dedups with a
+       full shuffle.  Here a pair is kept ONLY at its minimal shared
+       block — every earlier block must differ (a bitwise predicate on
+       the carried words' xor) — so no distinct, and no exchange at all,
+       follows the join.
+    2. **Triangle-partitioned self-join for oversized buckets (guide
+       §2.5)**, via :func:`_salted_self_pairs`.
+    """
+    from .candidates import bucket_pairs
 
-    df = spread_scan(df)
-    schema = StructType([df.schema["doc_id"], StructField("simhash", LongType())])
-
-    def batches(it):
-        import hashlib
-        from collections import Counter
-
-        import numpy as np
-        import pandas as pd
-
-        # per-task memo of unique-token vote bits; CAPPED so a huge
-        # partition vocabulary at web scale cannot grow the Python worker
-        # unboundedly (cap × ~400B ≈ 100 MB worst case; misses just
-        # recompute the md5)
-        cache: dict[str, np.ndarray] = {}
-        cache_cap = 1 << 18
-        shifts = np.arange(bits, dtype=np.uint64)
-
-        def tok_bits(tok: str) -> np.ndarray:
-            e = cache.get(tok)
-            if e is None:
-                d = np.frombuffer(
-                    hashlib.md5(tok.encode("utf-8")).digest(), np.uint8
-                )
-                e = np.unpackbits(d)[0 : 4 * bits : 4].astype(np.int64)
-                if len(cache) < cache_cap:
-                    cache[tok] = e
-            return e
-
-        for pdf in it:
-            ids, sigs = [], []
-            for doc_id, text in zip(pdf["doc_id"], pdf["text"]):
-                if text is None:
-                    continue
-                toks = text.split(" ")
-                n = len(toks)
-                ones = np.zeros(bits, np.int64)
-                for tok, c in Counter(toks).items():
-                    ones += c * tok_bits(tok)
-                sig = int((((2 * ones > n).astype(np.uint64)) << shifts).sum())
-                ids.append(doc_id)
-                sigs.append(sig)
-            yield pd.DataFrame({"doc_id": ids, "simhash": sigs})
-
-    return df.select("doc_id", F.col(text_col).alias("text")).mapInPandas(
-        batches, schema=schema
+    block = 32 * len(words) // 4
+    blocks = [(w, shift) for w in words for shift in range(0, 32, block)]
+    sig_key = (
+        [F.md5(F.concat_ws("|", *words)).alias("sig_key")]
+        if max_bucket_size is not None
+        else []
+    )
+    stacked = sig.select(
+        "doc_id",
+        *words,
+        *sig_key,
+        F.expr(
+            f"stack({len(blocks)}, "
+            + ", ".join(
+                f"{b}, CAST(shiftright({w}, {shift}) % {1 << block} AS BIGINT)"
+                for b, (w, shift) in enumerate(blocks)
+            )
+            + ") as (block_id, block_val)"
+        ),
+    )
+    xor = {w: F.col(f"{w}_a").bitwiseXOR(F.col(f"{w}_b")) for w in words}
+    if max_bucket_size is None:
+        pairs = _salted_self_pairs(
+            stacked,
+            key_cols=["block_id", "block_val"],
+            id_col="doc_id",
+            carry=words,
+            keep_cols=["block_id"],
+            out_a="doc_a",
+            out_b="doc_b",
+        )
+        keep = F.lit(True)
+        for b, (w, shift) in enumerate(blocks[:-1]):
+            differs = (
+                F.shiftright(xor[w], shift).bitwiseAND(F.lit((1 << block) - 1)) != 0
+            )
+            keep = keep & ((F.col("block_id") <= F.lit(b)) | differs)
+        pairs = pairs.filter(keep)
+    else:
+        pairs = bucket_pairs(
+            stacked,
+            ["block_id", "block_val"],
+            "doc_id",
+            sig_col="sig_key",
+            max_bucket_size=max_bucket_size,
+            out_a="doc_a",
+            out_b="doc_b",
+            carry_cols=words,
+        )
+    hamming = reduce(add, [F.bit_count(xor[w]) for w in words])
+    return pairs.select("doc_a", "doc_b", hamming.alias("hamming")).filter(
+        F.col("hamming") <= max_hamming
     )
 
 
-def simhash64_vectorized(df: DataFrame, text_col: str = "text") -> DataFrame:
-    """Arrow-vectorized twin of :func:`simhash64` (same contract and
-    rationale as :func:`simhash_vectorized`): per document, the two
-    salted md5 vote families — md5(tok) for the low half, md5('hi|'+tok)
-    for the high half — computed once per unique token per task and
-    majority-folded with two integer matrix ops."""
-    from pyspark.sql.types import LongType, StructField, StructType
-
-    from .spread import spread_scan
-
-    df = spread_scan(df)
-    schema = StructType(
-        [
-            df.schema["doc_id"],
-            StructField("sim_lo", LongType()),
-            StructField("sim_hi", LongType()),
-        ]
-    )
-
-    def batches(it):
-        import hashlib
-        from collections import Counter
-
-        import numpy as np
-        import pandas as pd
-
-        # capped per-task memo — see simhash_vectorized
-        cache: dict[str, tuple] = {}
-        cache_cap = 1 << 18
-        shifts = np.arange(32, dtype=np.uint64)
-
-        def tok_bits(tok: str):
-            e = cache.get(tok)
-            if e is None:
-                b = tok.encode("utf-8")
-                d1 = np.frombuffer(hashlib.md5(b).digest(), np.uint8)
-                d2 = np.frombuffer(hashlib.md5(b"hi|" + b).digest(), np.uint8)
-                e = (
-                    np.unpackbits(d1)[0:128:4].astype(np.int64),
-                    np.unpackbits(d2)[0:128:4].astype(np.int64),
-                )
-                if len(cache) < cache_cap:
-                    cache[tok] = e
-            return e
-
-        for pdf in it:
-            ids, los, his = [], [], []
-            for doc_id, text in zip(pdf["doc_id"], pdf["text"]):
-                if text is None:
-                    continue
-                toks = text.split(" ")
-                n = len(toks)
-                o1 = np.zeros(32, np.int64)
-                o2 = np.zeros(32, np.int64)
-                for tok, c in Counter(toks).items():
-                    b1, b2 = tok_bits(tok)
-                    o1 += c * b1
-                    o2 += c * b2
-                ids.append(doc_id)
-                los.append(int((((2 * o1 > n).astype(np.uint64)) << shifts).sum()))
-                his.append(int((((2 * o2 > n).astype(np.uint64)) << shifts).sum()))
-            yield pd.DataFrame({"doc_id": ids, "sim_lo": los, "sim_hi": his})
-
-    return df.select("doc_id", F.col(text_col).alias("text")).mapInPandas(
-        batches, schema=schema
-    )
-
-
-def _simhash_pairs_grouped_twolevel(
-    sig: DataFrame, bits: int, n_blocks: int, max_hamming: int
-) -> DataFrame:
-    """Uncapped SimHash pairs via DISTINCT-signature candidates and a
+def _simhash_pairs_grouped_twolevel(sig: DataFrame, max_hamming: int) -> DataFrame:
+    """Uncapped 32-bit SimHash pairs via DISTINCT-signature candidates and a
     two-level pigeonhole, expanded back to doc pairs exactly once.
 
     The doc-level block join evaluates C(bucket,2) per bucket; with a
@@ -1572,6 +1550,7 @@ def _simhash_pairs_grouped_twolevel(
     Identical result set to the plain block join + distinct: every doc
     pair within the hamming bound appears exactly once as
     (least, greatest, hamming)."""
+    bits, n_blocks = 32, 4
     block = bits // n_blocks
     n_sub = n_blocks
     sub = (bits - block) // n_sub
@@ -1657,23 +1636,18 @@ def _simhash_pairs_grouped_twolevel(
     )
     return cross.unionByName(same)
 
-
 def simhash_candidate_pairs(
     df: DataFrame,
     text_col: str = "text",
-    bits: int = 32,
-    n_blocks: int = 4,
     max_hamming: int = 3,
     max_bucket_size: int | None = None,
 ) -> DataFrame:
-    """SimHash near-duplicate pairs via the pigeonhole block construction
-    (Manku et al., "Detecting Near-Duplicates for Web Crawling"): split
-    the ``bits``-bit signature into ``n_blocks`` blocks and join on
-    (block_id, block_value) — any pair within ``max_hamming`` ≤
-    n_blocks−1 differing bits shares at least one untouched block, so
-    candidate recall is EXACT by pigeonhole; an integer bit_count(xor)
-    filter then verifies the distance.  Shuffle cost: one n_blocks-way
-    stack + one equi-join — never all-pairs.
+    """SimHash near-duplicate pairs over 32-bit signatures, 4 × 8-bit
+    pigeonhole blocks (see :func:`_simhash_block_pairs`): candidate
+    recall for hamming ≤ ``max_hamming`` (< 4) is EXACT by pigeonhole,
+    and an integer bit_count(xor) filter verifies the distance.
+    Uncapped, the pairs come from the two-level grouped join
+    (:func:`_simhash_pairs_grouped_twolevel`).
 
     ``max_bucket_size`` is the shared degenerate-bucket skew guard
     (pipelines.candidates.bucket_pairs): identical/boilerplate documents
@@ -1681,116 +1655,16 @@ def simhash_candidate_pairs(
     block_val) key makes the self-join quadratic; capped, those buckets
     take the linear signature-star path.  At web scale ALWAYS set it, and
     prefer :func:`simhash_candidate_pairs64` (64-bit signatures, 16-bit
-    blocks) — 32-bit/8-bit-block buckets hold ~N/256 docs each, which is
-    itself quadratic at 10^9+ docs even without skew.
+    blocks) — 8-bit-block buckets hold ~N/256 docs each, which is itself
+    quadratic at 10^9+ docs even without skew.
     Returns (doc_a, doc_b, hamming)."""
-    if max_hamming >= n_blocks:
-        raise ValueError("pigeonhole guarantee needs max_hamming < n_blocks")
-    from .candidates import bucket_pairs
-
-    block = bits // n_blocks
-    # Arrow-vectorized signature stage for both paths (see
-    # simhash_candidate_pairs64 for the rationale; unique doc_id is the
-    # pair-generation contract)
-    sig = simhash_vectorized(df, text_col, bits=bits).localCheckpoint(eager=True)
+    if max_hamming >= 4:
+        raise ValueError("pigeonhole guarantee needs max_hamming < 4 blocks")
+    # unique doc_id is the pair-generation contract of the signature stage
+    sig = simhash(df, text_col, bits=32).localCheckpoint(eager=True)
     if max_bucket_size is None:
-        if (bits - block) % n_blocks == 0 and (bits - block) // n_blocks > 0:
-            return _simhash_pairs_grouped_twolevel(sig, bits, n_blocks, max_hamming)
-        mask = (1 << block) - 1
-
-        def _differs(bp: int):
-            x = F.col("simhash_a").bitwiseXOR(F.col("simhash_b"))
-            return (F.shiftright(x, bp * block).bitwiseAND(F.lit(mask))) != 0
-
-        stacked_plain = sig.select(
-            "doc_id",
-            "simhash",
-            F.expr(
-                "stack({n}, {args}) as (block_id, block_val)".format(
-                    n=n_blocks,
-                    args=", ".join(
-                        f"{b}, CAST(shiftright(simhash, {b * block}) % {1 << block} AS BIGINT)"
-                        for b in range(n_blocks)
-                    ),
-                )
-            ),
-        )
-        pairs = _pigeonhole_pairs_uncapped(
-            stacked_plain, n_blocks, _differs, carry=["simhash"]
-        )
-    else:
-        stacked = sig.select(
-            "doc_id",
-            "simhash",
-            F.md5(F.col("simhash").cast("string")).alias("sig_key"),
-            F.expr(
-                "stack({n}, {args}) as (block_id, block_val)".format(
-                    n=n_blocks,
-                    args=", ".join(
-                        f"{b}, CAST(shiftright(simhash, {b * block}) % {1 << block} AS BIGINT)"
-                        for b in range(n_blocks)
-                    ),
-                )
-            ),
-        )
-        pairs = bucket_pairs(
-            stacked,
-            ["block_id", "block_val"],
-            "doc_id",
-            sig_col="sig_key",
-            max_bucket_size=max_bucket_size,
-            out_a="doc_a",
-            out_b="doc_b",
-            carry_cols=["simhash"],  # hamming verify without a join back
-        )
-    return pairs.select(
-        "doc_a",
-        "doc_b",
-        F.bit_count(F.col("simhash_a").bitwiseXOR(F.col("simhash_b"))).alias("hamming"),
-    ).filter(F.col("hamming") <= max_hamming)
-
-
-def simhash64(df: DataFrame, text_col: str = "text") -> DataFrame:
-    """64-bit SimHash as two 32-bit halves (doc_id, sim_lo, sim_hi).
-
-    Two salted md5s per token (the low half votes from md5(token), the
-    high half from md5('hi|' || token)) extend the md5-hex construction
-    of :func:`simhash` past its 32-bit cap; splitting the signature into
-    two non-negative 32-bit longs keeps every block/xor/bit_count
-    downstream in plain positive int64 arithmetic on BOTH engines (no
-    signed-top-bit portability trap).  Per-digit substring votes beat a
-    translate+conv bitmask under codegen (measured 20% — conv's string
-    parse costs more than N fixed-offset byte compares).  Still one
-    explode + one map-side-combinable groupBy — the scale-safe shape at
-    10^12 docs."""
-    from .spread import spread_scan
-
-    toks = spread_scan(df).select(
-        "doc_id", F.explode(F.split(F.col(text_col), " ")).alias("tok")
-    ).select(
-        "doc_id",
-        F.md5("tok").alias("h1"),
-        F.md5(F.concat(F.lit("hi|"), F.col("tok"))).alias("h2"),
-    )
-    # ones-count votes (see simhash): v > 0 ⟺ 2·ones > n, branchless input
-    votes = []
-    for i in range(32):
-        votes.append(
-            F.sum((F.substring("h1", i + 1, 1) >= "8").cast("int")).alias(f"lo{i}")
-        )
-        votes.append(
-            F.sum((F.substring("h2", i + 1, 1) >= "8").cast("int")).alias(f"hi{i}")
-        )
-    agg = toks.groupBy("doc_id").agg(F.count("*").alias("n"), *votes)
-    lo, hi = None, None
-    for i in range(32):
-        lob = F.when(2 * F.col(f"lo{i}") > F.col("n"), F.lit(1 << i)).otherwise(0)
-        hib = F.when(2 * F.col(f"hi{i}") > F.col("n"), F.lit(1 << i)).otherwise(0)
-        lo = lob if lo is None else lo + lob
-        hi = hib if hi is None else hi + hib
-    return agg.select(
-        "doc_id", lo.cast("long").alias("sim_lo"), hi.cast("long").alias("sim_hi")
-    )
+        return _simhash_pairs_grouped_twolevel(sig, max_hamming)
+    return _simhash_block_pairs(sig, ["simhash"], max_hamming, max_bucket_size)
 
 
 def simhash_candidate_pairs64(
@@ -1809,69 +1683,18 @@ def simhash_candidate_pairs64(
     survivable and a quadratic join at 10^9 docs); ``max_bucket_size``
     routes the residual hot buckets (identical/empty boilerplate docs)
     to the linear signature-star path via the shared
-    pipelines.candidates.bucket_pairs guard.  Candidate recall for
+    pipelines.candidates.bucket_pairs guard.  Uncapped, each pair is
+    emitted once, at its minimal shared block.  Candidate recall for
     hamming ≤ ``max_hamming`` (< 4) is exact by pigeonhole across the
     two halves.  Returns (doc_a, doc_b, hamming)."""
     if max_hamming >= 4:
         raise ValueError("pigeonhole guarantee needs max_hamming < 4 blocks")
-    from .candidates import bucket_pairs
-
-    # Arrow-vectorized signature stage for BOTH paths (the unique doc_id
-    # contract is inherent to pair generation; differential-tested equal
-    # to the simhash64 expression reference).  Beyond planning ~130
-    # aggregate expressions per build (~0.75 s of driver time the bench
-    # pays on every run), the vote aggregate was also the slowest stage —
-    # the one-node Arrow plan removes both.
-    sig = simhash64_vectorized(df, text_col).localCheckpoint(eager=True)
-    sig_cols = (
-        [F.md5(F.concat_ws("|", F.col("sim_lo"), F.col("sim_hi"))).alias("sig_key")]
-        if max_bucket_size is not None
-        else []
+    # the checkpoint feeds both join sides from one signature pass, and
+    # keeps the join/verify plan free of Python
+    sig = simhash64(df, text_col).localCheckpoint(eager=True)
+    return _simhash_block_pairs(
+        sig, ["sim_lo", "sim_hi"], max_hamming, max_bucket_size
     )
-    stacked = sig.select(
-        "doc_id",
-        "sim_lo",
-        "sim_hi",
-        *sig_cols,
-        F.expr(
-            "stack(4, "
-            "0, CAST(sim_lo % 65536 AS BIGINT), "
-            "1, CAST(shiftright(sim_lo, 16) AS BIGINT), "
-            "2, CAST(sim_hi % 65536 AS BIGINT), "
-            "3, CAST(shiftright(sim_hi, 16) AS BIGINT)"
-            ") as (block_id, block_val)"
-        ),
-    )
-    if max_bucket_size is None:
-
-        def _differs(bp: int):
-            xlo = F.col("sim_lo_a").bitwiseXOR(F.col("sim_lo_b"))
-            xhi = F.col("sim_hi_a").bitwiseXOR(F.col("sim_hi_b"))
-            half = xlo if bp < 2 else xhi
-            return (F.shiftright(half, 16 * (bp % 2)).bitwiseAND(F.lit(65535))) != 0
-
-        pairs = _pigeonhole_pairs_uncapped(
-            stacked, 4, _differs, carry=["sim_lo", "sim_hi"]
-        )
-    else:
-        pairs = bucket_pairs(
-            stacked,
-            ["block_id", "block_val"],
-            "doc_id",
-            sig_col="sig_key",
-            max_bucket_size=max_bucket_size,
-            out_a="doc_a",
-            out_b="doc_b",
-            carry_cols=["sim_lo", "sim_hi"],  # hamming verify without a join back
-        )
-    return pairs.select(
-        "doc_a",
-        "doc_b",
-        (
-            F.bit_count(F.col("sim_lo_a").bitwiseXOR(F.col("sim_lo_b")))
-            + F.bit_count(F.col("sim_hi_a").bitwiseXOR(F.col("sim_hi_b")))
-        ).alias("hamming"),
-    ).filter(F.col("hamming") <= max_hamming)
 
 
 def simhash_pairs_oracle_sql(

@@ -497,7 +497,8 @@ def mixture_sample(
     (stratum, bucket) — thousands of uniformly-sized keys, never the
     old one-reducer-per-stratum corpus sort — and mix_rank composes as
     offset + within-bucket rank, identical to the single global rank
-    because bucket order IS md5-prefix order.  Returns the input columns
+    because bucket order IS md5-prefix order.  Rows with a NULL key rank
+    after every non-NULL key of their stratum.  Returns the input columns
     plus mix_rank."""
     from itertools import chain
 
@@ -514,7 +515,11 @@ def mixture_sample(
         *chain.from_iterable((F.lit(k), F.lit(v)) for k, v in targets_bp.items())
     )
     rkey = F.md5(F.col(key_col).cast("string"))
-    bucket = F.conv(F.substring(rkey, 1, 3), 16, 10).cast("int")
+    # a NULL key (NULL md5) takes the bucket after the last md5 bucket, so
+    # it is counted, offset and ranked LAST — the twin's NULLS LAST order
+    bucket = F.coalesce(
+        F.conv(F.substring(rkey, 1, 3), 16, 10).cast("int"), F.lit(n_buckets)
+    )
     bcounts = (
         df.withColumn("__tbp", tmap[F.col(stratum_col)])
         .filter(F.col("__tbp").isNotNull())

@@ -32,7 +32,8 @@ ANNOTATIONS = {
     "embedding_topk_pq": "Per-subspace integer k-means codebooks (trained in-plan, tiny checkpointed tables) broadcast; encoding is a shuffle-free argmin expression; ADC scoring is m BroadcastHashJoins on the byte-code columns — the float corpus never shuffles.",
     "embedding_topk_ivf": "k-means coarse codebook (integer-exact Lloyd, checkpointed 8-row table) broadcast as ONE row; cell assignment and probe selection are shuffle-free array-argmin expressions (the old per-vector window-argmin cost a full shuffle); candidate search joins only on cell_id.",
     "embedding_topk_ivfpq": "IVF-PQ: coarse cells + residual sub-codebooks all broadcast; encoding is shuffle-free argmin over the residual slices; scoring is broadcast equi-joins on (cell, code_j), so a neighbor is scored only when its cell is probed — the corpus never shuffles and floats never rematerialize.",
-    "dedup_simhash_capped": "64-bit SimHash, 4x16-bit pigeonhole blocks through the SHARED capped bucket join: window count sizes every (block_id, block_val) bucket, degenerate buckets route to the linear signature-star path, hamming verify joins the checkpointed signature table — no quadratic key, no Python.",
+    "dedup_simhash": "One Arrow-batched map stage (MapInPandas) computes each document's signature from a per-task token memo — no token explode (Generate), no vote aggregate (HashAggregate); spread_scan's exchange only when the scan is unsplittable.",
+    "dedup_simhash_capped": "64-bit SimHash, 4x16-bit pigeonhole blocks through the SHARED capped bucket join: window count sizes every (block_id, block_val) bucket, degenerate buckets route to the linear signature-star path, hamming verify reads the signature halves carried through the join from the checkpointed signature table — no quadratic key, no Python.",
     "resource_blocking": "S5 blocking analog: the domain blocklist compiles to ONE rlike alternation and the resource-type list to an isin — verdict columns ride the scan, zero Exchange, zero Python, nothing joined.",
     "corpus_curation_full": "Quality/repetition gates ride the scan stage; the substring gate adds its fingerprint agg+join; one keeper-election shuffle; one final per-source agg — the whole curation chain in a single composed plan.",
     "embedding_topk_lsh": "Scale-config multi-table ANN: the bucket index is a pre-materialized checkpoint (ONE Arrow matmul upstream, invisible here); candidates come from a broadcast bucket equi-join, scoring joins only the candidate set — no cartesian, no nested loop.",
@@ -53,8 +54,8 @@ ANNOTATIONS = {
     "decontaminate_fuzzy": "Every join broadcast (bench band index, candidate-id semi-join, candidate pairs, bench shingles) — zero SortMergeJoin, so the corpus never shuffles on doc_id for the benchmark-bounded candidate set; best-match via row_number over the tiny scored set.",
     "dedup_incremental": "The persisted history index joins the new increment's band keys — broadcast/bucket equi-joins only; the historical corpus is never rescanned, only its ~n_bands-rows-per-doc index participates.",
     "dedup_index_compaction": "Union + combinable distinct over N per-increment index row sets, materialized via localCheckpoint (the returned plan reads the compacted table); the corpora behind the indexes are never rescanned.",
-    "dedup_simhash_pairs": "Round-6 shape: distinct-signature grouping (collect_list ids ride as carry columns) + two-level pigeonhole (block, sub-block of the residual) + exactly-once minimal-(b,s) emission via xor predicates + triangle-partitioned oversized buckets — 52.9M signature-level candidates replace 758M doc-level ones at sf1.0, and NO distinct/exchange follows the join.",
-    "dedup_simhash64_pairs": "Round-6 shape: Arrow-vectorized signature stage (one batched map, no explode/agg exchange), then the exactly-once minimal-block pigeonhole join with triangle-partitioned oversized buckets; no distinct anywhere.",
+    "dedup_simhash_pairs": "Signatures from the one Arrow SimHash stage (checkpointed), then distinct-signature grouping (collect_list ids ride as carry columns) + two-level pigeonhole (block, sub-block of the residual) + exactly-once minimal-(b,s) emission via xor predicates + triangle-partitioned oversized buckets — 52.9M signature-level candidates replace 758M doc-level ones at sf1.0, and NO distinct/exchange follows the join.",
+    "dedup_simhash64_pairs": "The one Arrow SimHash stage (one batched map over two md5 salts, no explode/agg exchange), then the exactly-once minimal-block pigeonhole join with triangle-partitioned oversized buckets; no distinct anywhere.",
     "mixture_sample": "Round-6 shape (retires the r5 weak flag): combinable (stratum, md5-prefix-bucket) counts; per-bucket offsets + caps broadcast; past-cap buckets drop before the shuffle; the exact rank window partitions by (stratum, bucket) and mix_rank composes as offset + within-bucket rank.",
     "doc_winnowing": "Round-6 shape: shared zip-shifted shingle builder + sparse-table rolling minima (log2(window) zip_with passes), hash array materialized in its own projection so the interpreted min stage reads it instead of re-hashing per reference.",
 }

@@ -239,13 +239,14 @@ def test_csv_schema_ddl_with_parameterized_types(spark, tmp_path):
 
 
 def test_jvm_assembly_matches_python_assembly(spark):
-    """The native span→html assembly projection must produce byte-identical
-    extraction output to the in-Python assembly, including the edge shapes:
-    null spans, empty arrays, media-only docs, empty-text html spans,
-    out-of-order offsets, and null offsets (which order last, stably, in
-    both paths rather than raising in one and tying in the other)."""
-    from fetch_engines_spark.extract import INPUT_SCHEMA, extract_spans
-    from fetch_engines_spark.fixtures import fixture_document_rows
+    """The native span→html assembly projection (html_assembly_expr) must
+    produce byte-identical documents to fixtures.assemble_html, including
+    the edge shapes: null spans, empty arrays, media-only docs, empty-text
+    html spans, out-of-order offsets, and null offsets (which order last,
+    stably, in both rather than raising in one and tying in the other);
+    extraction over those documents tolerates every shape."""
+    from fetch_engines_spark.extract import INPUT_SCHEMA, extract_spans, html_assembly_expr
+    from fetch_engines_spark.fixtures import assemble_html, fixture_document_rows
 
     rows = fixture_document_rows() + [
         {"doc_id": "x-null", "base_url": None, "canonical_url": None, "spans": None},
@@ -277,22 +278,17 @@ def test_jvm_assembly_matches_python_assembly(spark):
         },
     ]
     docs = spark.createDataFrame(rows, INPUT_SCHEMA)
+    # a NULL assembly (no html spans) converts as the empty document
+    jvm = {
+        r.doc_id: r.html or ""
+        for r in docs.select("doc_id", html_assembly_expr("spans").alias("html")).collect()
+    }
+    # null offsets once raised TypeError in assemble_html's sort
+    assert jvm == {r["doc_id"]: assemble_html(r["spans"] or []) for r in rows}
     a = {
         r.doc_id: (r.title, [tuple(s) for s in (r.spans or [])], r.error)
-        for r in extract_spans(docs, assemble_in_jvm=True).collect()
+        for r in extract_spans(docs).collect()
     }
-    b = {
-        r.doc_id: (r.title, [tuple(s) for s in (r.spans or [])], r.error)
-        for r in extract_spans(docs, assemble_in_jvm=False).collect()
-    }
-    # the mapInPandas adapter (fixtures.assemble_html) must agree too —
-    # including on null offsets, which once raised TypeError in its sort
-    c = {
-        r.doc_id: (r.title, [tuple(s) for s in (r.spans or [])], r.error)
-        for r in extract_spans(docs, use_arrow=False).collect()
-    }
-    assert a == b
-    assert a == c
     assert a["x-out-of-order"][1]  # content extracted from reordered spans
     assert a["x-null-offset"][2] is None  # tolerated, not an ERR_EXTRACTION row
     assert "head" in " ".join(s[1] or "" for s in a["x-null-offset"][1])

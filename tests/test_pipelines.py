@@ -643,16 +643,36 @@ def test_cap_per_stratum_is_deterministic_and_bounded(spark):
     assert max(r.stratum_rank for r in a) == 5
 
 
+def _twin_rows(sql: str, **tables) -> list[tuple]:
+    """Rows of a DuckDB twin query, with pyarrow ``tables`` registered
+    under their keyword names."""
+    import duckdb
+
+    con = duckdb.connect()
+    for name, table in tables.items():
+        con.register(name, table)
+    return con.sql(sql).fetchall()
+
+
+SF0001_DOCS = "/root/testdata/sf0.001/documents.parquet"
+
+
 def test_simhash_pairs_pigeonhole_recall_is_exact(spark):
     """The block join must contain EVERY pair within max_hamming (the
     pigeonhole guarantee), verified against brute-force hamming over all
-    signature pairs, with zero false positives after the verify filter."""
+    pairs of the DuckDB twin's signatures, with zero false positives
+    after the verify filter."""
     from itertools import combinations
 
-    from fetch_engines_spark.pipelines.dedup import simhash, simhash_candidate_pairs
+    from fetch_engines_spark.pipelines.dedup import (
+        simhash_candidate_pairs,
+        simhash_oracle_sql,
+    )
 
-    docs = spark.read.parquet("/root/testdata/sf0.001/documents.parquet")
-    sigs = {r.doc_id: r.simhash for r in simhash(docs, bits=32).collect()}
+    docs = spark.read.parquet(SF0001_DOCS)
+    sigs = dict(
+        _twin_rows(simhash_oracle_sql(bits=32, source=f"read_parquet('{SF0001_DOCS}')"))
+    )
     truth = {
         (a, b)
         for a, b in combinations(sorted(sigs), 2)
@@ -660,7 +680,7 @@ def test_simhash_pairs_pigeonhole_recall_is_exact(spark):
     }
     got = {
         (r.doc_a, r.doc_b)
-        for r in simhash_candidate_pairs(docs, bits=32, n_blocks=4, max_hamming=3).collect()
+        for r in simhash_candidate_pairs(docs, max_hamming=3).collect()
     }
     assert got == truth and truth  # exact recall, no false positives, non-trivial
 
@@ -668,16 +688,22 @@ def test_simhash_pairs_pigeonhole_recall_is_exact(spark):
 def test_simhash64_pigeonhole_recall_is_exact(spark):
     """64-bit/16-bit-block config: the block join must contain EVERY pair
     within max_hamming across both halves (pigeonhole over 4 blocks),
-    verified against brute-force hamming, zero false positives."""
+    verified against brute-force hamming over the DuckDB twin's
+    signatures, zero false positives."""
     from itertools import combinations
 
     from fetch_engines_spark.pipelines.dedup import (
-        simhash64,
+        simhash64_oracle_sql,
         simhash_candidate_pairs64,
     )
 
-    docs = spark.read.parquet("/root/testdata/sf0.001/documents.parquet")
-    sigs = {r.doc_id: (r.sim_lo, r.sim_hi) for r in simhash64(docs).collect()}
+    docs = spark.read.parquet(SF0001_DOCS)
+    sigs = {
+        d: (lo, hi)
+        for d, lo, hi in _twin_rows(
+            simhash64_oracle_sql(source=f"read_parquet('{SF0001_DOCS}')")
+        )
+    }
     assert all(0 <= lo < 2**32 and 0 <= hi < 2**32 for lo, hi in sigs.values())
 
     def ham(a, b):
@@ -696,16 +722,19 @@ def test_simhash64_pigeonhole_recall_is_exact(spark):
 
 
 def test_simhash_vectorized_matches_expr(spark):
-    """The Arrow-vectorized signature fast path (round 6) must equal the
-    JVM expression reference bit-for-bit on adversarial text: empty
+    """The Arrow signature stage behind simhash/simhash64 must equal the
+    DuckDB twins (simhash_oracle_sql at 16 and 32 bits,
+    simhash64_oracle_sql) bit-for-bit on adversarial text: empty
     strings, runs of spaces (empty tokens), unicode, single tokens,
     heavy repetition, and exact vote ties (2·ones == n must NOT set the
-    bit).  NULL text yields no row on either path."""
+    bit).  NULL text yields no row on either engine."""
+    import pyarrow as pa
+
     from fetch_engines_spark.pipelines.dedup import (
         simhash,
         simhash64,
-        simhash64_vectorized,
-        simhash_vectorized,
+        simhash64_oracle_sql,
+        simhash_oracle_sql,
     )
 
     rows = [
@@ -719,23 +748,29 @@ def test_simhash_vectorized_matches_expr(spark):
         (8, "x y " * 500),
     ]
     docs = spark.createDataFrame(rows, "doc_id long, text string")
-    ref = {r.doc_id: r.simhash for r in simhash(docs, bits=32).collect()}
-    fast = {r.doc_id: r.simhash for r in simhash_vectorized(docs, bits=32).collect()}
-    assert fast == ref and 7 not in fast
-    ref64 = {r.doc_id: (r.sim_lo, r.sim_hi) for r in simhash64(docs).collect()}
-    fast64 = {
-        r.doc_id: (r.sim_lo, r.sim_hi) for r in simhash64_vectorized(docs).collect()
-    }
-    assert fast64 == ref64 and 7 not in fast64
-    # and on real corpus text
-    corpus = spark.read.parquet("/root/testdata/sf0.001/documents.parquet")
-    assert (
-        simhash_vectorized(corpus, bits=32)
-        .exceptAll(simhash(corpus, bits=32))
-        .count()
-        == 0
+    table = pa.table(
+        {
+            "doc_id": pa.array([r[0] for r in rows], pa.int64()),
+            "text": pa.array([r[1] for r in rows], pa.string()),
+        }
     )
-    assert simhash64_vectorized(corpus).exceptAll(simhash64(corpus)).count() == 0
+    corpus = spark.read.parquet(SF0001_DOCS)
+    corpus_src = f"read_parquet('{SF0001_DOCS}')"
+    for bits in (16, 32):
+        ref = dict(_twin_rows(simhash_oracle_sql(bits=bits), documents=table))
+        got = {r.doc_id: r.simhash for r in simhash(docs, bits=bits).collect()}
+        assert got == ref and 7 not in got
+        # and on real corpus text
+        ref = sorted(_twin_rows(simhash_oracle_sql(bits=bits, source=corpus_src)))
+        assert sorted(tuple(r) for r in simhash(corpus, bits=bits).collect()) == ref
+    ref64 = {
+        d: (lo, hi)
+        for d, lo, hi in _twin_rows(simhash64_oracle_sql(), documents=table)
+    }
+    got64 = {r.doc_id: (r.sim_lo, r.sim_hi) for r in simhash64(docs).collect()}
+    assert got64 == ref64 and 7 not in got64
+    ref64 = sorted(_twin_rows(simhash64_oracle_sql(source=corpus_src)))
+    assert sorted(tuple(r) for r in simhash64(corpus).collect()) == ref64
 
 
 def test_simhash_pairs_exactly_once_no_distinct(spark):
@@ -753,13 +788,13 @@ def test_simhash_pairs_exactly_once_no_distinct(spark):
     from pyspark.sql import functions as F
 
     from fetch_engines_spark.pipelines.dedup import (
-        simhash,
-        simhash64,
+        simhash64_oracle_sql,
         simhash_candidate_pairs,
         simhash_candidate_pairs64,
+        simhash_oracle_sql,
     )
 
-    base = spark.read.parquet("/root/testdata/sf0.001/documents.parquet")
+    base = spark.read.parquet(SF0001_DOCS)
     # 3 byte-identical replicas per doc (forces same-sig groups and, with
     # a tiny big_bucket via the shared path defaults, shared hot buckets)
     rep = spark.range(3).select(F.col("id").alias("rep"))
@@ -767,7 +802,12 @@ def test_simhash_pairs_exactly_once_no_distinct(spark):
         (F.col("doc_id") * 10 + F.col("rep")).alias("doc_id"), "text"
     )
 
-    sigs = {r.doc_id: r.simhash for r in simhash(docs, bits=32).collect()}
+    # the same replicas on the DuckDB side, for the twins' signatures
+    replicas = (
+        "(SELECT doc_id * 10 + rep AS doc_id, text "
+        f"FROM read_parquet('{SF0001_DOCS}') CROSS JOIN range(3) r(rep)) d"
+    )
+    sigs = dict(_twin_rows(simhash_oracle_sql(bits=32, source=replicas)))
     truth = Counter(
         (a, b)
         for a, b in combinations(sorted(sigs), 2)
@@ -775,14 +815,14 @@ def test_simhash_pairs_exactly_once_no_distinct(spark):
     )
     got = Counter(
         (r.doc_a, r.doc_b)
-        for r in simhash_candidate_pairs(
-            docs, bits=32, n_blocks=4, max_hamming=3
-        ).collect()
+        for r in simhash_candidate_pairs(docs, max_hamming=3).collect()
     )
     assert got == truth and truth
     assert max(got.values()) == 1  # exactly-once, not distinct-ed
 
-    s64 = {r.doc_id: (r.sim_lo, r.sim_hi) for r in simhash64(docs).collect()}
+    s64 = {
+        d: (lo, hi) for d, lo, hi in _twin_rows(simhash64_oracle_sql(source=replicas))
+    }
 
     def ham(a, b):
         return bin(a[0] ^ b[0]).count("1") + bin(a[1] ^ b[1]).count("1")
@@ -833,6 +873,7 @@ def test_bucket_pairs_capped_equals_uncapped_below_cap(spark):
 
     from fetch_engines_spark.pipelines.dedup import (
         minhash_candidate_pairs,
+        simhash_candidate_pairs,
         simhash_candidate_pairs64,
     )
 
@@ -859,6 +900,59 @@ def test_bucket_pairs_capped_equals_uncapped_below_cap(spark):
         ).collect()
     }
     assert sh_capped == sh_uncapped
+    # the 32-bit words take the same capped block join
+    sh32_uncapped = {
+        (r.doc_a, r.doc_b)
+        for r in simhash_candidate_pairs(docs, max_hamming=3).collect()
+    }
+    sh32_capped = {
+        (r.doc_a, r.doc_b)
+        for r in simhash_candidate_pairs(
+            docs, max_hamming=3, max_bucket_size=10**6
+        ).collect()
+    }
+    assert sh32_capped == sh32_uncapped
+
+
+def test_salted_self_pairs_triangle_branch_exactly_once(spark):
+    """Buckets over ``big_bucket`` rows take the triangle-partitioned
+    self-join: each row is replicated to G group-pair tasks and a pair
+    must still come out EXACTLY once per shared bucket.  With
+    big_bucket=4, a 30-row bucket (and a 5-row one) take that branch,
+    while 4-row and smaller buckets take the plain join; ids shared
+    between buckets must pair once in each.  Multiplicity is checked
+    against brute force."""
+    from collections import Counter
+    from itertools import combinations
+
+    from fetch_engines_spark.pipelines.dedup import _salted_self_pairs
+
+    buckets = {
+        "big": list(range(30)),
+        "five": [100, 101, 102, 103, 3],
+        "four": [200, 201, 202, 5],
+        "pair": [300, 7],
+        "one": [400],
+    }
+    rows = [(k, i, i * 7) for k, ids in buckets.items() for i in ids]
+    stacked = spark.createDataFrame(rows, "k string, doc_id long, sig long")
+    out = _salted_self_pairs(
+        stacked,
+        key_cols=["k"],
+        id_col="doc_id",
+        carry=["sig"],
+        keep_cols=["k"],
+        out_a="a",
+        out_b="b",
+        big_bucket=4,
+    ).collect()
+    got = Counter((r.k, r.a, r.b) for r in out)
+    truth = Counter(
+        (k, a, b) for k, ids in buckets.items() for a, b in combinations(sorted(ids), 2)
+    )
+    assert got == truth
+    assert max(got.values()) == 1
+    assert all(r.sig_a == r.a * 7 and r.sig_b == r.b * 7 for r in out)
 
 
 def test_bucket_pairs_cap_requires_sig_col():
@@ -3041,6 +3135,44 @@ def test_mixture_sample_exact_ratios_and_edge_cases(spark):
     # unachievable share -> empty mix
     empty = mixture_sample(docs, {"src0": 5000, "no_such_source": 5000})
     assert empty.count() == 0
+
+
+def test_mixture_sample_null_key_ranks_last_like_twin(spark):
+    """A NULL key is sampled, not dropped: it ranks after every keyed row
+    of its stratum, as in the DuckDB twin (mixture_sample_sql).  src0 is
+    1 NULL-key row plus 10 keyed rows, alone at a 100% share (all 11
+    kept, the NULL key at rank 11); with src1 (1 NULL + 5 keyed) at a
+    50/50 mix, src0 is capped at 6 and its NULL-key row falls past the
+    cap, while src1's is kept at rank 6."""
+    from collections import Counter
+
+    import pyarrow as pa
+
+    from fetch_engines_spark.pipelines.text import mixture_sample, mixture_sample_sql
+
+    rows = (
+        [(None, "src0")]
+        + [(i, "src0") for i in range(10)]
+        + [(None, "src1")]
+        + [(i, "src1") for i in range(10, 15)]
+    )
+    docs = spark.createDataFrame(rows, "doc_id long, source string")
+    table = pa.table(
+        {
+            "doc_id": pa.array([r[0] for r in rows], pa.int64()),
+            "source": pa.array([r[1] for r in rows], pa.string()),
+        }
+    )
+    for targets in ({"src0": 10000}, {"src0": 5000, "src1": 5000}):
+        got = Counter(
+            (r.doc_id, r.source, r.mix_rank)
+            for r in mixture_sample(docs, targets).collect()
+        )
+        want = Counter(_twin_rows(mixture_sample_sql(targets), documents=table))
+        assert got == want, targets
+    full = mixture_sample(docs, {"src0": 10000}).collect()
+    assert len(full) == 11
+    assert [r.mix_rank for r in full if r.doc_id is None] == [11]
 
 
 def test_bloom_gate_null_key_reads_definitely_new(spark):

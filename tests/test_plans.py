@@ -43,15 +43,24 @@ def test_topk_window_has_rank_limit_pushdown(spark):
 
 
 def test_extraction_plan_is_single_python_stage(spark):
-    """Exactly ONE Python boundary (the Arrow extraction stage) — the
+    """Exactly ONE Python boundary, the mapInArrow extraction stage — the
     north_rule's one-vectorized-UDF constraint, enforced on the plan."""
     df = entrymod.queries()["extract_spans_fixture"](spark, SF)
     plan = plan_of(df)
-    n_python = (
-        plan.count("MapInArrow") + plan.count("MapInPandas")
-        + plan.count("ArrowEvalPython") + plan.count("BatchEvalPython")
-    )
-    assert n_python == 1, plan
+    assert plan.count("MapInArrow") == 1, plan
+    for marker in ("MapInPandas", "ArrowEvalPython", "BatchEvalPython"):
+        assert marker not in plan, plan
+
+
+def test_simhash_signatures_are_one_arrow_stage(spark):
+    """SimHash signatures come from ONE Arrow-batched map stage: no token
+    explode (Generate) and no vote aggregate (HashAggregate) in the
+    plan."""
+    df = entrymod.queries()["dedup_simhash"](spark, SF)
+    plan = plan_of(df)
+    assert plan.count("MapInPandas") == 1, plan
+    assert "Generate" not in plan, plan
+    assert "HashAggregate" not in plan, plan
 
 
 def test_classifier_queries_have_no_python(spark):
@@ -180,8 +189,8 @@ def test_simhash_capped_pairs_no_python_and_no_cartesian(spark):
     """The 64-bit SimHash capped join (shared candidates.bucket_pairs
     guard) keeps the equi-join shape: no cross/nested-loop joins, and —
     like the media near-dup gate — the ONLY Python is the single
-    Arrow-batched signature stage (round 6: simhash64_vectorized,
-    differential-tested vs the expression reference), which is
+    Arrow-batched signature stage (simhash64, differential-tested vs
+    the DuckDB twin simhash64_oracle_sql), which is
     checkpoint-materialized so the join/verify plan itself is pure JVM
     (the checkpointed RDD feeds both join sides and the hamming
     verify)."""
